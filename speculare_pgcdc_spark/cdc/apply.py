@@ -9,14 +9,17 @@ an insert/update comes from its row map; a delete carries no columns
 is extracted from the raw payload (``change_json``), which both parse
 branches preserve verbatim.
 
-Scale shape: latest-change-per-key is ONE hash aggregation
-(max_by over the (seq, chg_idx) WAL order — no window, no sort), the
-merge is one equi-join on the key. With the base bucketed by key
-(sources.write_bucketed) the join side is co-located and the whole
-apply is a single shuffle of the (small) change batch. The snapshot
-OVERWRITE in :func:`start_apply_query` is the local-parquet stand-in
-for a real table format's row-level MERGE (Delta/Iceberg) — the apply
-PLAN is the part that carries over.
+Scale shape: latest-change-per-key is ONE aggregation (max_by over
+the (seq, chg_idx) WAL order — no window, no join-back). Its map-typed
+buffer plans it as a SortAggregate; it is kept because it is total
+(one row per key, ties and null seq included) and measured faster
+than the hash-aggregate + join-back alternative (see
+:func:`latest_changes`). The merge is one equi-join on the key. With
+the base bucketed by key (sources.write_bucketed) the join side is
+co-located and the whole apply is a single shuffle of the (small)
+change batch. The snapshot OVERWRITE in :func:`start_apply_query` is
+the local-parquet stand-in for a real table format's row-level MERGE
+(Delta/Iceberg) — the apply PLAN is the part that carries over.
 """
 
 from __future__ import annotations
@@ -117,50 +120,6 @@ def _change_key(key_col: str, from_cols: bool = False):
     )
 
 
-def _keyed_changes(
-    changes: DataFrame,
-    key_col: str,
-    key_t: str,
-    tables: list[str] | None,
-) -> DataFrame:
-    """The parsed batch at change grain, keyed and WAL-ordered:
-    ``key_col`` + ``_ord`` (decimal(32,0) packing of (seq, chg_idx) —
-    seq fits decimal(19,0) because it is a bigint and chg_idx fits
-    decimal(10,0) because it is a non-negative int, so
-    seq * 10^10 + chg_idx is an order-embedding of the (seq, chg_idx)
-    lexicographic WAL order into one numeric) + ``_chg`` (struct kind,
-    row_str). Packed rather than struct-typed because max over a
-    DECIMAL buffer is hash-aggregable while max/max_by over any
-    struct/map/string buffer plans as SortAggregate (UnsafeRow
-    mutability rule) — the r14 verdict's top remaining bottleneck on
-    the apply path."""
-    rel = changes if tables is None else changes.filter(
-        F.col("table_name").isin(tables)
-    )
-    keyed = rel.select(
-        _change_key(key_col, "_dk_names" in changes.columns)
-        .cast(key_t)
-        .alias(key_col),
-        (
-            F.col("seq").cast("decimal(19,0)")
-            * F.lit(10_000_000_000).cast("decimal(11,0)")
-            + F.col("chg_idx").cast("decimal(10,0)")
-        ).alias("_ord"),
-        F.struct("kind", "row_str").alias("_chg"),
-    )
-    # Generate barrier before the null-key guard (r14, guide §4.4's
-    # duplicate-evaluation defect): a filter above a projection is
-    # pushed below it with the alias SUBSTITUTED, so filtering on the
-    # key column directly re-ran the whole key expression — including
-    # the full row_str map build it reads through — once in the pushed
-    # filter and again in the projection. Behind catalog.eval_once the
-    # row is evaluated exactly once and the guard tests a materialized
-    # struct field instead.
-    return eval_once(keyed, key_col, "_ord", "_chg").filter(
-        F.col(key_col).isNotNull()
-    )
-
-
 def latest_changes(
     changes: DataFrame,
     key_col: str,
@@ -177,29 +136,46 @@ def latest_changes(
     instead of once per consumer (round-13: the banded consumer's
     extra passes were re-parsing the batch three times).
 
-    Shape (r15, the r14 verdict's top item): the old one-pass
-    ``max_by(_chg, _ord)`` planned as SortAggregate — the map-typed
-    ``_chg`` buffer is not hash-aggregable — i.e. a per-partition
-    sort of the FULL parsed batch (payload included) on the hottest
-    apply path. Now the decision is made on a lightweight proxy and
-    re-attached (guide §8): pin the parsed batch once
-    (localCheckpoint — also what keeps the parse at one run with two
-    consumers below), HashAggregate ``max(_ord)`` per key over just
-    (key, ord), and join the winners back on (key, ord) equality.
-    The payload is never sorted and never shuffled when AQE
-    broadcasts the tiny max-ord side. Correct because a WAL position
-    (seq, chg_idx) is unique per change — the join-back matches
-    exactly the one winning row per key. (A seq-less multi-message
-    feed can tie positions; those were already documented as
-    order-undefined — parse feeds carry seq.)"""
-    keyed = _keyed_changes(changes, key_col, key_t, tables).localCheckpoint(
-        eager=False
+    Total by construction: ``max_by`` emits exactly one row per
+    distinct non-null key, whatever the order column holds. Changes
+    whose key resolves to null are dropped. The order is the struct
+    (seq, chg_idx) under Spark's struct ordering, so a null ``seq``
+    sorts BELOW every non-null seq — such a change wins only when all
+    of its key's changes have null seq, and its key is never lost.
+    Ties (equal (seq, chg_idx): every seq-less file feed across
+    messages, every v2 feed within one seq) still give one row; WHICH
+    tied change wins is undefined.
+
+    Plan: one aggregate over the full parsed batch. The map-typed
+    ``_chg`` buffer is not hash-aggregable, so it plans as a
+    SortAggregate. A hash ``max`` over a packed decimal ordinal plus a
+    join back on (key, ordinal) avoids that sort, but it measured
+    slower (interleaved same-session A/B, sf0.1, 7 rounds, 4 vCPUs:
+    q96 median 2.18 s vs 2.55 s, q97 2.63 s vs 2.88 s), needs a
+    change-grain pin, and returns every tied row."""
+    rel = changes if tables is None else changes.filter(
+        F.col("table_name").isin(tables)
     )
-    mx = keyed.groupBy(key_col).agg(F.max("_ord").alias("_max_ord"))
-    return (
-        keyed.join(mx, key_col)
-        .where(F.col("_ord") == F.col("_max_ord"))
-        .select(key_col, "_chg")
+    keyed = rel.select(
+        _change_key(key_col, "_dk_names" in changes.columns)
+        .cast(key_t)
+        .alias(key_col),
+        F.struct("seq", "chg_idx").alias("_ord"),
+        F.struct("kind", "row_str").alias("_chg"),
+    )
+    # Generate barrier before the null-key guard (r14, guide §4.4's
+    # duplicate-evaluation defect): a filter above a projection is
+    # pushed below it with the alias SUBSTITUTED, so filtering on the
+    # key column directly re-ran the whole key expression — including
+    # the full row_str map build it reads through — once in the pushed
+    # filter and again in the projection. Behind catalog.eval_once the
+    # row is evaluated exactly once and the guard tests a materialized
+    # struct field instead.
+    keyed = eval_once(keyed, key_col, "_ord", "_chg").filter(
+        F.col(key_col).isNotNull()
+    )
+    return keyed.groupBy(key_col).agg(
+        F.max_by("_chg", "_ord").alias("_chg")
     )
 
 
@@ -257,57 +233,22 @@ def apply_changes(
     return apply_latest(base, latest, key_col, columns)
 
 
-def touched_groups(
-    old_snapshot: DataFrame,
-    changes: DataFrame,
-    key_col: str,
-    group_col: str,
-    key_type: str = "bigint",
-    tables: list[str] | None = None,
-) -> DataFrame:
-    """Distinct group values a change batch can affect: the OLD group
-    of every changed key (updates/deletes pull their group from the
-    pre-apply snapshot — wal2json deletes carry no columns) plus the
-    NEW group of every upsert. One column (``group_col``), distinct.
-    Bounded by the batch size, never by the snapshot."""
-    rel = changes if tables is None else changes.filter(
-        F.col("table_name").isin(tables)
-    )
-    keyed = rel.select(
-        _change_key(key_col, "_dk_names" in changes.columns)
-        .cast(key_type)
-        .alias(key_col),
-        F.try_element_at("row_str", F.lit(group_col)).alias("_new_g"),
-        "kind",
-    ).filter(F.col(key_col).isNotNull())
-    old_side = (
-        old_snapshot.select(key_col, group_col)
-        .join(keyed.select(key_col).distinct(), key_col)
-        .select(group_col)
-    )
-    new_side = keyed.filter(F.col("kind") != "delete").select(
-        F.col("_new_g").cast(
-            dict(old_snapshot.select(group_col).dtypes)[group_col]
-        ).alias(group_col)
-    )
-    return old_side.unionByName(new_side).distinct()
-
-
 def touched_groups_latest(
     old_snapshot: DataFrame,
     latest: DataFrame,
     key_col: str,
     group_col: str,
 ) -> DataFrame:
-    """:func:`touched_groups` computed from an already-parsed
-    :func:`latest_changes` frame instead of the raw batch — saves the
-    streaming consumers a full batch re-parse per microbatch. Covers a
-    SUBSET of touched_groups' raw-grain set (the new group of an
-    upsert that a later same-batch delete erased is skipped), but
-    every group whose CONTENT can differ post-apply is still present:
-    old groups of all net-changed keys + new groups of net-surviving
-    upserts. Refreshing a group whose content didn't change is a
-    no-op, so the two sets refresh to identical views."""
+    """Distinct group values a change batch can affect, from its
+    :func:`latest_changes` frame: the OLD group of every changed key
+    (updates/deletes pull their group from the pre-apply snapshot —
+    wal2json deletes carry no columns) plus the NEW group of every
+    net-surviving upsert. One column (``group_col``), distinct.
+    Bounded by the batch's key count, never by the snapshot, and reads
+    the already-parsed batch, so the group derivation costs no
+    re-parse. The new group of an upsert that a later same-batch
+    delete erased is skipped: that group's content cannot differ
+    post-apply (refreshing it would be a no-op)."""
     old_side = (
         old_snapshot.select(key_col, group_col)
         .join(latest.select(key_col), key_col)  # latest: one row/key
@@ -331,7 +272,7 @@ def refresh_aggregates(
     """Incremental materialized-view maintenance (IVM): re-aggregate
     ONLY the groups a batch touched, carry every other matview row
     forward untouched. ``groups`` is the one-column frame from
-    :func:`touched_groups`; ``agg_cols`` the aliased aggregate
+    :func:`touched_groups_latest`; ``agg_cols`` the aliased aggregate
     expressions (the view definition).
 
     Why partial recompute instead of +/- deltas: wal2json deletes (and
@@ -414,7 +355,7 @@ def start_matview_query(
 ):
     """Maintain a parquet snapshot AND an incrementally-refreshed
     aggregate view from the live change stream — the streaming twin of
-    q97's batch IVM (touched_groups + refresh_aggregates per
+    q97's batch IVM (touched_groups_latest + refresh_aggregates per
     microbatch, only touched groups recomputed, every other view row
     carried forward).
 
@@ -428,11 +369,11 @@ def start_matview_query(
     replayed batch converges both artifacts. Commit ORDER is
     load-bearing (round-12 advice): the VIEW swaps first, the snapshot
     second. A crash between the swaps then replays the batch against
-    the PRE-batch snapshot — touched_groups still sees the OLD group
-    of every delete and group-moving update, and re-refreshing the
+    the PRE-batch snapshot — the touched groups still include the OLD
+    group of every delete and group-moving update, and re-refreshing the
     already-committed view recomputes those groups to the same values
     (convergent). The old order (snapshot first) was wrong for exactly
-    those shapes: the replay computed touched_groups from the
+    those shapes: the replay computed the touched groups from the
     POST-apply snapshot, where a deleted/moved row's old group is
     unrecoverable, so its stale view row was carried forward
     permanently.
@@ -458,7 +399,7 @@ def start_matview_query(
             mv_old, new_snapshot, groups, group_col, agg_cols_fn()
         )
         # BOTH tmp writes land before either directory swaps — the
-        # view plan reads the PRE-swap snapshot (touched_groups'
+        # view plan reads the PRE-swap snapshot (touched_groups_latest'
         # old-group join) and the pre-swap view, so swapping the
         # snapshot first would pull files out from under a lazy scan
         new_snapshot.select(*ordered).write.mode("overwrite").parquet(

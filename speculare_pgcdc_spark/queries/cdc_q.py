@@ -141,8 +141,11 @@ def q81(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="CDC APPLY (the downstream consumer the reference leaves to "
     "its users): merge the parsed change feed into a base snapshot — "
-    "latest change per key in WAL order via ONE max_by hash agg (no "
-    "window/sort), upserts replace rows, deletes (key from oldkeys/"
+    "latest change per key in WAL order via ONE max_by aggregate (no "
+    "window, no join-back; its map-typed buffer plans as a "
+    "SortAggregate, kept because it is total on ties and null seq and "
+    "beat a hash max + join-back in an interleaved A/B), upserts "
+    "replace rows, deletes (key from oldkeys/"
     "identity in the raw payload — deletes carry no columns, the §2A "
     "quirk) remove them, untouched keys pass through an anti-join "
     "(cdc/apply.py). Changes on the unknown _hyper_9 chunk stay "
@@ -198,7 +201,9 @@ def q96(spark: SparkSession, sf: str) -> DataFrame:
     "no columns, so subtractive +/- deltas are impossible without "
     "REPLICA IDENTITY FULL; new group from the upsert row) and "
     "carrying every other view row forward (cdc/apply.py "
-    "touched_groups + refresh_aggregates; broadcast semi/anti joins, "
+    "latest_changes pinned once, then apply_latest + "
+    "touched_groups_latest + refresh_aggregates; broadcast semi/anti "
+    "joins, "
     "snapshot slice partition-prunable by group). The "
     "untouched-rows-are-NOT-recomputed property is pinned separately "
     "in tests/test_cdc.py with a poisoned-view probe; this query "
@@ -208,9 +213,10 @@ def q96(spark: SparkSession, sf: str) -> DataFrame:
 def q97(spark: SparkSession, sf: str) -> DataFrame:
     from speculare_pgcdc_spark.catalog import table
     from speculare_pgcdc_spark.cdc.apply import (
-        apply_changes,
+        apply_latest,
+        latest_changes,
         refresh_aggregates,
-        touched_groups,
+        touched_groups_latest,
     )
 
     cols = {
@@ -223,32 +229,22 @@ def q97(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("value").alias("_sv"),
     ]
     feed = feed_messages(spark, sf)
-    # both apply_changes and touched_groups consume the parsed feed;
-    # checkpoint it once so the wal2json parse (the expensive lineage)
-    # runs once, not per consumer. The checkpoint materializes EVERY
-    # column it holds, so project to what the two consumers read —
-    # with delete_keys=True that excludes change_json, i.e. the
-    # to_json payload render never runs in this query
-    changes = (
-        normalize_hypertables(
-            parse_wal2json(feed, delete_keys=True), lookup_df(spark)
-        )
-        .select(
-            "table_name", "seq", "chg_idx", "kind", "row_str",
-            "_dk_names", "_dk_vals",
-        )
-        .localCheckpoint(eager=False)
+    changes = normalize_hypertables(
+        parse_wal2json(feed, delete_keys=True), lookup_df(spark)
     )
+    # the streaming matview consumer's shape: ONE parse of the batch,
+    # pinned at key grain, shared by the merge and the group derivation
+    lat = latest_changes(
+        changes, "event_id", "bigint", FEED_TABLES
+    ).localCheckpoint(eager=True)
     base = table(spark, sf, "events").select(
         *[F.col(c).cast(t).alias(c) for c, t in cols.items()]
     )
     mv_old = base.groupBy("event_type").agg(*aggs)
-    snapshot_new = apply_changes(
-        base, changes, "event_id", cols, tables=FEED_TABLES
+    snapshot_new = apply_latest(
+        base, lat, "event_id", cols
     ).localCheckpoint(eager=True)
-    groups = touched_groups(
-        base, changes, "event_id", "event_type", tables=FEED_TABLES
-    )
+    groups = touched_groups_latest(base, lat, "event_id", "event_type")
     mv_new = refresh_aggregates(
         mv_old, snapshot_new, groups, "event_type", aggs
     )

@@ -6,6 +6,8 @@ Spark pipeline on tiny literal frames."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from speculare_pgcdc_spark.cdc.pipeline import (
@@ -410,9 +412,10 @@ def test_refresh_aggregates_carries_untouched_groups_forward(spark):
     recompute would 'fix'. Touched groups are corrected; a group whose
     last row was deleted disappears."""
     from speculare_pgcdc_spark.cdc.apply import (
-        apply_changes,
+        apply_latest,
+        latest_changes,
         refresh_aggregates,
-        touched_groups,
+        touched_groups_latest,
     )
 
     cols = {"id": "bigint", "grp": "string", "v": "double"}
@@ -457,7 +460,8 @@ def test_refresh_aggregates_carries_untouched_groups_forward(spark):
         "table_name", F.col("table")
     )
 
-    groups = touched_groups(base, changes, "id", "grp")
+    lat = latest_changes(changes, "id", "bigint")
+    groups = touched_groups_latest(base, lat, "id", "grp")
     assert {r["grp"] for r in groups.collect()} == {"a", "b", "c"}
 
     # POISONED view: untouched d carries a wrong sum on purpose; the
@@ -471,7 +475,7 @@ def test_refresh_aggregates_carries_untouched_groups_forward(spark):
         ],
         "grp string, n bigint, sv double",
     )
-    snapshot_new = apply_changes(base, changes, "id", cols)
+    snapshot_new = apply_latest(base, lat, "id", cols)
     mv_new = refresh_aggregates(mv_old, snapshot_new, groups, "grp", aggs)
     got = {r["grp"]: (r["n"], r["sv"]) for r in mv_new.collect()}
     assert got == {
@@ -603,40 +607,145 @@ def test_latest_changes_builds_row_map_once(spark):
     substituted, re-building the full row_str map per row (once in
     the filter, once in the projection). Behind the eval_once barrier
     the optimized plan holds exactly one map build."""
-    from speculare_pgcdc_spark.cdc.apply import _keyed_changes
-
-    feed = spark.createDataFrame(
-        [(1, INSERT_STR)], "lsn bigint, payload string"
+    plan = (
+        _latest_of(
+            spark.createDataFrame(
+                [(1, INSERT_STR)], "lsn bigint, payload string"
+            )
+        )
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
     )
-    changes = parse_wal2json(
-        feed, seq_col="lsn", delete_keys=True
-    ).withColumn("table_name", F.col("table"))
-    # lint the pre-checkpoint keyed frame (latest_changes itself pins
-    # it behind a localCheckpoint, which truncates the visible plan)
-    keyed = _keyed_changes(changes, "id", "string", TABLES)
-    plan = keyed._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("map_from_arrays") == 1, plan
 
 
-def test_latest_changes_agg_is_hash_not_sort(spark):
-    """r15 (r14 verdict item 1): the per-key latest-change reduction
-    must plan as HashAggregate — the old max_by over the map-typed
-    _chg buffer planned as SortAggregate (per-partition sort of the
-    full parsed payload). The rewrite aggregates max over a packed
-    decimal (seq, chg_idx) order key and joins the winner back, so
-    the executed plan holds a HashAggregate and NO SortAggregate."""
+def _latest_of(feed):
     from speculare_pgcdc_spark.cdc.apply import latest_changes
 
-    feed = spark.createDataFrame(
-        [(1, INSERT_STR)], "lsn bigint, payload string"
-    )
     changes = parse_wal2json(
         feed, seq_col="lsn", delete_keys=True
     ).withColumn("table_name", F.col("table"))
-    lat = latest_changes(changes, "id", tables=TABLES)
-    plan = lat._jdf.queryExecution().executedPlan().toString()
-    assert "SortAggregate" not in plan, plan
-    assert "HashAggregate" in plan, plan
+    return latest_changes(changes, "id", tables=TABLES)
+
+
+def test_latest_changes_is_one_pass_without_pin_or_join(spark, tmp_path):
+    """The per-key reduction is one max_by over the keyed batch: no
+    join back to the change grain (it returns every tied row) and no
+    change-grain pin inside latest_changes — callers pin its key-grain
+    result once. The feed is read from parquet so that any
+    ``Scan ExistingRDD`` in the plan can only come from a pin."""
+    spark.createDataFrame(
+        [(1, INSERT_STR)], "lsn bigint, payload string"
+    ).write.parquet(str(tmp_path / "feed"))
+    plan = (
+        _latest_of(spark.read.parquet(str(tmp_path / "feed")))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Join" not in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
+def _v1_change(kind, key, tag):
+    k = "null" if key is None else str(key)
+    if kind == "delete":
+        return (
+            '{"kind":"delete","table":"t",'
+            f'"oldkeys":{{"keynames":["id"],"keyvalues":[{k}]}}}}'
+        )
+    return (
+        f'{{"kind":"{kind}","table":"t","columnnames":["id","name"],'
+        f'"columntypes":["integer","text"],"columnvalues":[{k},"{tag}"]}}'
+    )
+
+
+def _v2_message(kind, key, tag):
+    k = "null" if key is None else str(key)
+    idc = f'{{"name":"id","type":"integer","value":{k}}}'
+    if kind == "delete":
+        return (
+            '{"action":"D","schema":"public","table":"t",'
+            f'"identity":[{idc}]}}'
+        )
+    return (
+        f'{{"action":"{kind[0].upper()}","schema":"public","table":"t",'
+        f'"columns":[{idc},'
+        f'{{"name":"name","type":"text","value":"{tag}"}}]}}'
+    )
+
+
+_change_st = st.tuples(
+    st.sampled_from(["insert", "update", "delete"]),
+    st.one_of(st.none(), st.integers(0, 3)),
+)
+_batch_st = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(0, 2)),  # lsn
+        st.lists(_change_st, min_size=1, max_size=3),
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(fmt=st.sampled_from(["v1", "v2"]), batch=_batch_st)
+def test_latest_changes_one_row_per_key(spark, fmt, batch):
+    """Contract: exactly one row per distinct non-null key, over ties
+    (equal (seq, chg_idx) — small lsn range, v2's chg_idx == 0), null
+    lsn (null seq sorts below every seq) and null keys (dropped).
+    Where a key's max (seq, chg_idx) is unique, its row carries that
+    change."""
+    from speculare_pgcdc_spark.cdc.apply import latest_changes
+
+    render = _v1_change if fmt == "v1" else _v2_message
+    rows, expect = [], {}
+    tag = 0
+    for lsn, chs in batch:
+        # v1: one message per transaction, chg_idx = array position;
+        # v2: one message per change, chg_idx always 0
+        msgs = (
+            [list(enumerate(chs))] if fmt == "v1"
+            else [[(0, c)] for c in chs]
+        )
+        for msg in msgs:
+            parts = []
+            for idx, (kind, key) in msg:
+                tag += 1
+                parts.append(render(kind, key, f"c{tag}"))
+                if key is not None:
+                    # Spark struct order: null seq sorts first
+                    ordv = (lsn is not None, lsn or 0, idx)
+                    expect.setdefault(key, []).append(
+                        (ordv, kind, None if kind == "delete" else f"c{tag}")
+                    )
+            rows.append((
+                lsn,
+                '{"change":[' + ",".join(parts) + "]}" if fmt == "v1"
+                else parts[0],
+            ))
+    feed = spark.createDataFrame(rows, "lsn bigint, payload string")
+    changes = parse_wal2json(
+        feed, seq_col="lsn", fmt=fmt, delete_keys=True
+    ).withColumn("table_name", F.col("table"))
+    got = latest_changes(changes, "id", "bigint").collect()
+
+    assert sorted(r["id"] for r in got) == sorted(expect), (got, expect)
+    for r in got:
+        cands = expect[r["id"]]
+        top = max(o for o, _, _ in cands)
+        winners = [(k, n) for o, k, n in cands if o == top]
+        if len(winners) == 1:
+            kind, name = winners[0]
+            assert r["_chg"]["kind"] == kind, (r, cands)
+            if name is not None:
+                assert r["_chg"]["row_str"]["name"] == name, (r, cands)
 
 
 def test_ensure_feed_hot_recovers_dropped_cache(spark, sf_dir):
